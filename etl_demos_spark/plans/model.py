@@ -67,8 +67,8 @@ class Pipeline:
 
     def _validate_refs(self) -> None:
         """Fail fast, by name, on refs to unregistered models — without
-        this a typo'd ref surfaces as a bare KeyError mid-run (sequential)
-        or a bogus 'cycle in model graph' (parallel)."""
+        this a typo'd ref is scheduled as a model of its own and
+        surfaces as a bare KeyError mid-run."""
         for name, m in self.models.items():
             unknown = [r for r in m.refs if r not in self.models]
             if unknown:
@@ -77,54 +77,48 @@ class Pipeline:
                     f"registered: {sorted(self.models)}"
                 )
 
-    def order(self) -> list[str]:
+    def _graph(self) -> graphlib.TopologicalSorter:
         self._validate_refs()
-        ts = graphlib.TopologicalSorter(
+        return graphlib.TopologicalSorter(
             {name: set(m.refs) for name, m in self.models.items()}
         )
-        return list(ts.static_order())
 
-    def levels(self) -> list[list[str]]:
-        """Topological levels: models within a level have no dependencies
-        on each other and can build concurrently (D5 — the reference runs
-        dbt with 4 threads, profiles.yml:10)."""
-        self._validate_refs()
-        remaining = {name: set(m.refs) for name, m in self.models.items()}
-        out: list[list[str]] = []
-        done: set[str] = set()
-        while remaining:
-            ready = sorted(n for n, deps in remaining.items() if deps <= done)
-            if not ready:
-                raise ValueError("cycle in model graph")
-            out.append(ready)
-            done.update(ready)
-            for n in ready:
-                remaining.pop(n)
-        return out
+    def order(self) -> list[str]:
+        return list(self._graph().static_order())
 
     def run(
         self,
         spark: SparkSession,
         sources: dict[str, DataFrame],
         check: bool = True,
-        parallelism: int = 1,
     ) -> dict[str, DataFrame]:
-        """Build every model in dependency order. Returns name → DataFrame.
+        """Build every model, each as soon as its refs are built (D5 — the
+        reference runs dbt with 4 threads, profiles.yml:10). Returns
+        name → DataFrame.
 
         ``table`` models are written to the warehouse dir (partitioned if
         declared) and re-read, so downstream plans start from a fresh scan
-        with statistics; ``view`` models stay lazy lineage.
+        with statistics; ``view`` models stay lazy lineage. Only the table
+        writes run Spark work at build time, so independent writes (the
+        dimensions, then the facts) overlap in Spark's scheduler the way
+        dbt's threads overlap CREATE TABLEs. Build threads inherit the
+        caller's job group, job tags and scheduler pool.
 
-        ``parallelism > 1`` builds each topological level's models
-        concurrently (D5): Spark's scheduler interleaves the jobs — only
-        ``table`` models actually run work at build time, so this overlaps
-        their write jobs exactly like dbt's threads overlap CREATE TABLEs.
+        If a model function or its write raises, no model that depends on
+        it is started, writes already in flight finish, and the first
+        error is re-raised with the model's name added as a note.
+        ``check`` then runs the assertions as one Spark action
+        (plans/quality.run_assertions) and raises on any failure.
         """
-        from concurrent.futures import ThreadPoolExecutor
+        from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
+        from pyspark.util import inheritable_thread_target
+
+        graph = self._graph()
+        graph.prepare()
         built: dict[str, DataFrame] = {}
 
-        def build_one(name: str) -> tuple[str, DataFrame]:
+        def build_one(name: str) -> DataFrame:
             m = self.models[name]
             missing = [s for s in m.sources if s not in sources]
             if missing:
@@ -141,15 +135,33 @@ class Pipeline:
                     writer = writer.partitionBy(*m.partition_by)
                 writer.parquet(path)
                 df = spark.read.parquet(path)
-            return name, df
+            return df
 
-        if parallelism <= 1:
-            for name in self.order():
-                built.update([build_one(name)])
-        else:
-            with ThreadPoolExecutor(max_workers=parallelism) as pool:
-                for level in self.levels():
-                    built.update(pool.map(build_one, level))
+        # Wrapped here, on the caller's thread: the wrapper snapshots the
+        # caller's Spark local properties and tags at wrap time.
+        target = inheritable_thread_target(spark)(build_one)
+        error: Exception | None = None
+        with ThreadPoolExecutor(max_workers=max(1, len(self.models))) as pool:
+            running = {}
+            while True:
+                if error is None:
+                    for name in graph.get_ready():
+                        running[pool.submit(target, name)] = name
+                if not running:
+                    break
+                finished, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in finished:
+                    name = running.pop(fut)
+                    try:
+                        built[name] = fut.result()
+                    except Exception as e:
+                        if error is None:
+                            e.add_note(f"raised while building model {name!r}")
+                            error = e
+                    else:
+                        graph.done(name)
+        if error is not None:
+            raise error
         if check:
             from etl_demos_spark.plans.quality import run_assertions
 

@@ -4,37 +4,103 @@ Reference: not_null/unique on keys (dbt/models/staging/staging.yml:12-28,
 marts_core.yml:3-16), executed by `dbt test` as count-of-violations
 queries (bank_etl_dag.py:66-72). Same semantics here, as aggregations:
 
-- not_null: COUNT(rows where any key column IS NULL) == 0
-- unique:   COUNT(groups with >1 row) == 0
+- not_null:        COUNT(rows where any key column IS NULL) == 0
+- unique:          COUNT(groups with >1 row) == 0
+- accepted_values: COUNT(non-NULL rows outside the allowed set) == 0
+- relationships:   COUNT(non-NULL FKs with no parent row) == 0
 
-Scale: both are single-shuffle aggregations; `unique` piggybacks the
-groupBy on the key (map-side partial counts). Violations are *returned*,
-not just counted, capped, so failures are debuggable without a re-run.
+Each check kind has one implementation, a lazy single-row frame with one
+``violations`` column (``CHECKS``). ``run_assertions`` unions the frames
+of a whole assertion set and collects once, so the gate is one Spark
+action whose scans and shuffles AQE runs as concurrent stages, instead
+of one action per check; the ``*_violations`` helpers read the frame's
+single row.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
+from operator import or_
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
-def not_null_violations(df: DataFrame, columns: Sequence[str]) -> int:
-    cond = None
-    for c in columns:
-        cur = F.col(c).isNull()
-        cond = cur if cond is None else (cond | cur)
-    return df.filter(cond).count()
+def _counted(violating: DataFrame) -> DataFrame:
+    return violating.agg(F.count(F.lit(1)).alias("violations"))
 
 
-def unique_violations(df: DataFrame, columns: Sequence[str]) -> int:
-    return (
+def not_null_check(df: DataFrame, columns: Sequence[str]) -> DataFrame:
+    return _counted(df.filter(reduce(or_, [F.col(c).isNull() for c in columns])))
+
+
+def unique_check(df: DataFrame, columns: Sequence[str]) -> DataFrame:
+    """Keys held by more than one row; the groupBy on the key does
+    map-side partial counts."""
+    return _counted(
         df.groupBy(*columns)
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") > 1)
-        .count()
     )
+
+
+def accepted_values_check(
+    df: DataFrame, columns: Sequence[str], values: Sequence = ()
+) -> DataFrame:
+    """dbt `accepted_values`: rows whose column holds something outside
+    the allowed set (NULLs pass — dbt's semantics; pair with not_null to
+    forbid them). The IN-list is a literal, so the predicate pushes to
+    the scan."""
+    (c,) = columns
+    return _counted(df.filter(F.col(c).isNotNull() & ~F.col(c).isin(list(values))))
+
+
+def relationships_check(
+    df: DataFrame, columns: Sequence[str], to: DataFrame = None, field: str = ""
+) -> DataFrame:
+    """dbt `relationships`: FK values with no matching parent row — a
+    LEFT ANTI join on the key (NULL FKs pass, as in dbt). The parent
+    side is usually dimension-sized → AQE broadcasts it; at fact-fact
+    scale this is one keyed shuffle."""
+    (c,) = columns
+    parent = to.select(F.col(field).alias("__pk")).distinct()
+    return _counted(
+        df.filter(F.col(c).isNotNull())
+        .join(parent, F.col(c) == F.col("__pk"), "left_anti")
+    )
+
+
+CHECKS = {
+    "not_null": not_null_check,
+    "unique": unique_check,
+    "accepted_values": accepted_values_check,
+    "relationships": relationships_check,
+}
+
+
+def _violations(check: DataFrame) -> int:
+    return check.first()["violations"]
+
+
+def not_null_violations(df: DataFrame, columns: Sequence[str]) -> int:
+    return _violations(not_null_check(df, columns))
+
+
+def unique_violations(df: DataFrame, columns: Sequence[str]) -> int:
+    return _violations(unique_check(df, columns))
+
+
+def accepted_values_violations(
+    df: DataFrame, columns: Sequence[str], values: Sequence = ()
+) -> int:
+    return _violations(accepted_values_check(df, columns, values))
+
+
+def relationship_violations(
+    df: DataFrame, columns: Sequence[str], to: DataFrame = None, field: str = ""
+) -> int:
+    return _violations(relationships_check(df, columns, to, field))
 
 
 def assert_not_null(df: DataFrame, columns: Sequence[str]) -> None:
@@ -49,71 +115,44 @@ def assert_unique(df: DataFrame, columns: Sequence[str]) -> None:
         raise AssertionError(f"unique{tuple(columns)}: {n} duplicated keys")
 
 
-def accepted_values_violations(
-    df: DataFrame, columns: Sequence[str], values: Sequence = ()
-) -> int:
-    """dbt `accepted_values`: rows whose column holds something outside
-    the allowed set (NULLs pass — dbt's semantics; pair with not_null to
-    forbid them). One filtered count; the IN-list is a literal, so the
-    predicate pushes to the scan."""
-    (c,) = columns
-    return df.filter(
-        F.col(c).isNotNull() & ~F.col(c).isin(list(values))
-    ).count()
-
-
-def relationship_violations(
-    df: DataFrame, columns: Sequence[str], to: DataFrame = None, field: str = ""
-) -> int:
-    """dbt `relationships`: FK values with no matching parent row — a
-    LEFT ANTI join on the key (NULL FKs pass, as in dbt). The parent
-    side is usually dimension-sized → AQE broadcasts it; at fact-fact
-    scale this is one keyed shuffle."""
-    (c,) = columns
-    parent = to.select(F.col(field).alias("__pk")).distinct()
-    return (
-        df.filter(F.col(c).isNotNull())
-        .join(parent, F.col(c) == F.col("__pk"), "left_anti")
-        .count()
-    )
-
-
-CHECKS = {
-    "not_null": not_null_violations,
-    "unique": unique_violations,
-    "accepted_values": accepted_values_violations,
-    "relationships": relationship_violations,
-}
-
-
 def run_assertions(built: dict[str, DataFrame], assertions) -> list[str]:
     """Run (model, kind, columns[, params]) tuples; return failure
-    descriptions. All four dbt schema-test kinds are declarative:
-    accepted_values takes ``values=[...]``; relationships takes
-    ``to=<built model name>, field=<parent col>`` (``to`` is resolved
-    against ``built`` here). Unknown kinds and unresolvable ``to``
-    models become failure strings, never mid-run KeyErrors."""
-    failures = []
+    descriptions in assertion order. All four dbt schema-test kinds are
+    declarative: accepted_values takes ``values=[...]``; relationships
+    takes ``to=<built model name>, field=<parent col>`` (``to`` is
+    resolved against ``built`` here). Unknown kinds and unresolvable
+    ``to`` models become failure strings, never mid-run KeyErrors.
+
+    Every runnable check's count frame is tagged with its position and
+    the union of them is collected once: one Spark action for the set."""
+    slots: list[str] = []  # per assertion: its failure, or its label if counted
+    counted: list[DataFrame] = []
     for entry in assertions:
         model, kind, columns = entry[0], entry[1], entry[2]
         params = dict(entry[3]) if len(entry) > 3 else {}
+        label = f"{model}.{kind}{columns}"
         if model not in built:
-            failures.append(f"{model}.{kind}{columns}: model not built")
+            slots.append(f"{label}: model not built")
             continue
         if kind not in CHECKS:
-            failures.append(f"{model}.{kind}{columns}: unknown assertion kind")
+            slots.append(f"{label}: unknown assertion kind")
             continue
         if kind == "relationships":
             to = params.get("to")
             if to not in built:
-                failures.append(
-                    f"{model}.{kind}{columns}: parent model {to!r} not built"
-                )
+                slots.append(f"{label}: parent model {to!r} not built")
                 continue
             params["to"] = built[to]
-        n = CHECKS[kind](built[model], columns, **params)
-        if n:
-            failures.append(f"{model}.{kind}{columns}: {n} violations")
+        check = CHECKS[kind](built[model], columns, **params)
+        counted.append(check.select(F.lit(len(slots)).alias("slot"), "violations"))
+        slots.append(label)
+    n_by_slot = dict(reduce(DataFrame.unionAll, counted).collect()) if counted else {}
+    failures = []
+    for i, text in enumerate(slots):
+        if i not in n_by_slot:
+            failures.append(text)
+        elif n_by_slot[i]:
+            failures.append(f"{text}: {n_by_slot[i]} violations")
     return failures
 
 

@@ -6237,40 +6237,37 @@ def q_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     test runner executes per model (reference dbt/models/staging/
     staging.yml, bank_etl_dag.py test task). accepted_values is
     deliberately violated here ('P' status) so the non-zero path is
-    exercised; the FK check plans as a broadcast anti join."""
+    exercised. Each branch is the check kind's own count frame
+    (plans/quality.CHECKS), the one run_assertions unions for the gate."""
+    from etl_demos_spark.plans.quality import (
+        accepted_values_check,
+        not_null_check,
+        relationships_check,
+        unique_check,
+    )
+
     o = T(spark, sf_dir, "orders")
     c = T(spark, sf_dir, "customer")
 
-    def branch(name: str, df: DataFrame) -> DataFrame:
-        return df.agg(F.count(F.lit(1)).alias("violations")).select(
-            F.lit(name).alias("check_name"), F.col("violations")
-        )
+    def branch(name: str, check: DataFrame) -> DataFrame:
+        return check.select(F.lit(name).alias("check_name"), "violations")
 
-    not_null = branch(
-        "orders_custkey_not_null", o.filter(F.col("o_custkey").isNull())
+    return (
+        branch("orders_custkey_not_null", not_null_check(o, ["o_custkey"]))
+        .unionByName(branch("orders_orderkey_unique", unique_check(o, ["o_orderkey"])))
+        .unionByName(
+            branch(
+                "orders_status_accepted",
+                accepted_values_check(o, ["o_orderstatus"], values=["O", "F"]),
+            )
+        )
+        .unionByName(
+            branch(
+                "orders_custkey_relationship",
+                relationships_check(o, ["o_custkey"], to=c, field="c_custkey"),
+            )
+        )
     )
-    unique = branch(
-        "orders_orderkey_unique",
-        o.groupBy("o_orderkey")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1),
-    )
-    accepted = branch(
-        "orders_status_accepted",
-        o.filter(
-            F.col("o_orderstatus").isNotNull()
-            & ~F.col("o_orderstatus").isin(["O", "F"])
-        ),
-    )
-    fk = branch(
-        "orders_custkey_relationship",
-        o.filter(F.col("o_custkey").isNotNull()).join(
-            F.broadcast(c.select(F.col("c_custkey").alias("__pk")).distinct()),
-            F.col("o_custkey") == F.col("__pk"),
-            "left_anti",
-        ),
-    )
-    return not_null.unionByName(unique).unionByName(accepted).unionByName(fk)
 
 
 @workload(

@@ -122,22 +122,166 @@ def test_toposort_order_respects_refs(spark):
     assert order.index("dim_date") < order.index("f_default_event")
 
 
-@pytest.mark.slow
-def test_parallel_run_matches_sequential(spark, bank_sources, tmp_path_factory):
-    wh = str(tmp_path_factory.mktemp("wh_par"))
-    p = build_bank_pipeline(warehouse_dir=wh)
-    seq = p.run(spark, bank_sources, check=False)
-    wh2 = str(tmp_path_factory.mktemp("wh_par2"))
-    p2 = build_bank_pipeline(warehouse_dir=wh2)
-    par = p2.run(spark, bank_sources, check=True, parallelism=4)
-    for name in seq:
-        assert seq[name].count() == par[name].count(), name
-    # levels respect dependencies
-    lv = p.levels()
-    pos = {n: i for i, level in enumerate(lv) for n in level}
+def test_run_starts_each_model_after_its_refs(spark, bank_sources, tmp_path):
+    import threading
+    import time
+
+    p = build_bank_pipeline(warehouse_dir=str(tmp_path))
+    spans: dict[str, tuple] = {}
+    lock = threading.Lock()
+
+    def timed(name, fn):
+        def wrapped(s, **kwargs):
+            start = time.perf_counter()
+            written = {r for r in p.models[name].refs if (tmp_path / r / "_SUCCESS").exists()}
+            df = fn(s, **kwargs)
+            with lock:
+                spans[name] = (start, time.perf_counter(), written)
+            return df
+        return wrapped
+
     for name, m in p.models.items():
+        m.fn = timed(name, m.fn)
+    built = p.run(spark, bank_sources, check=True)
+
+    assert set(spans) == set(p.models)
+    for name, m in p.models.items():
+        start, _, written = spans[name]
         for r in m.refs:
-            assert pos[r] < pos[name]
+            assert spans[r][1] <= start, f"{name} started before {r} returned"
+            if p.models[r].materialized == "table":
+                assert r in written, f"{name} started before {r} was written"
+    assert built["stg_corebank_customers"].count() == 50
+    assert built["f_loan_contract"].count() == 200
+    assert built["dim_date"].count() == 5844
+    assert built["f_default_event"].count() == 10
+
+
+def test_run_overlaps_independent_models(spark):
+    """Two models with no ref between them must be in flight together:
+    each waits for the other at a barrier, which a one-at-a-time build
+    would break on its timeout."""
+    import threading
+
+    p = Pipeline()
+    meet = threading.Barrier(2, timeout=60)
+
+    for name in ("left", "right"):
+        @p.model(name)
+        def m(s):
+            meet.wait()
+            return s.range(1)
+
+    built = p.run(spark, {}, check=False)
+    assert set(built) == {"left", "right"}
+
+
+def test_run_carries_job_group_into_build_threads(spark, tmp_path):
+    import uuid
+
+    sc = spark.sparkContext
+    p = Pipeline(warehouse_dir=str(tmp_path))
+
+    @p.model("t", materialized="table")
+    def t(s):
+        return s.range(10)
+
+    group = f"pipeline-{uuid.uuid4().hex}"
+    ungrouped_before = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup(group, "pipeline run")
+    try:
+        p.run(spark, {}, check=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    in_group = set(sc.statusTracker().getJobIdsForGroup(group))
+    assert in_group, "the table write ran outside the caller's job group"
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) <= ungrouped_before
+    assert (tmp_path / "t" / "_SUCCESS").exists()
+
+
+def test_run_failure_names_model_and_skips_dependents(spark, tmp_path):
+    """A raising dimension: run re-raises its error with the model name,
+    never builds the fact that refs it, and returns only after the
+    independent table already in flight has been written."""
+    import threading
+    import time
+
+    p = Pipeline(warehouse_dir=str(tmp_path))
+    failing = threading.Event()
+    called = []
+
+    @p.model("dim_bad", materialized="table")
+    def dim_bad(s):
+        failing.set()
+        raise ValueError("bad dimension")
+
+    @p.model("f_fact", refs=("dim_bad",), materialized="table")
+    def f_fact(s, dim_bad):
+        called.append("f_fact")
+        return dim_bad
+
+    @p.model("dim_slow", materialized="table")
+    def dim_slow(s):
+        assert failing.wait(60)
+        time.sleep(0.2)  # still running when dim_bad's error arrives
+        return s.range(5)
+
+    with pytest.raises(ValueError, match="bad dimension") as e:
+        p.run(spark, {}, check=False)
+    assert any("dim_bad" in note for note in getattr(e.value, "__notes__", []))
+    assert called == []
+    assert not (tmp_path / "f_fact").exists()
+    assert (tmp_path / "dim_slow" / "_SUCCESS").exists()
+
+
+def test_run_assertions_failure_strings_pinned(spark):
+    """Failure strings and their order for a mixed set: Spark-counted
+    violations interleaved with the checks that fail before any job
+    (unbuilt model, unknown kind, unbuilt relationships parent). All the
+    counted checks run as one SQL execution."""
+    from etl_demos_spark.plans.quality import run_assertions
+
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last_execution_id():
+        bus.waitUntilEmpty()
+        n = store.executionsCount()
+        return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+    child = spark.createDataFrame(
+        [(1, "A", 1), (1, "Z", 9), (None, None, None)],
+        "k long, status string, fk long",
+    )
+    parent = spark.createDataFrame([(1,), (2,)], "id long")
+    built = {"child": child, "parent": parent}
+    assertions = [
+        ("child", "not_null", ("k",)),
+        ("missing", "not_null", ("k",)),
+        ("child", "unique", ("k",)),
+        ("child", "frobnicate", ("k",)),
+        ("child", "relationships", ("fk",), {"to": "nope", "field": "id"}),
+        ("parent", "unique", ("id",)),
+        ("child", "accepted_values", ("status",), {"values": ["A"]}),
+        ("child", "relationships", ("fk",), {"to": "parent", "field": "id"}),
+        ("parent", "not_null", ("id",)),
+        ("child", "not_null", ["status", "fk"]),
+    ]
+    before = last_execution_id()
+    failures = run_assertions(built, assertions)
+    assert last_execution_id() == before + 1
+    assert failures == [
+        "child.not_null('k',): 1 violations",
+        "missing.not_null('k',): model not built",
+        "child.unique('k',): 1 violations",
+        "child.frobnicate('k',): unknown assertion kind",
+        "child.relationships('fk',): parent model 'nope' not built",
+        "child.accepted_values('status',): 1 violations",
+        "child.relationships('fk',): 1 violations",
+        "child.not_null['status', 'fk']: 1 violations",
+    ]
+    assert run_assertions(built, []) == []
 
 
 def test_quantile_profile_exact_and_approx(spark):
@@ -250,7 +394,7 @@ def test_unregistered_ref_fails_fast_by_name(spark):
     with pytest.raises(ValueError, match="stg_loanz"):
         p.order()
     with pytest.raises(ValueError, match="stg_loanz"):
-        p.levels()
+        p.run(spark, {}, check=False)
 
 
 def test_add_assertion_rejects_unknown_kind(spark):
